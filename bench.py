@@ -24,6 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# where the per-scale SHUFFLE_sf<sf>.json sidecar lands
+SIDECAR_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def main() -> None:
@@ -47,9 +49,9 @@ def main() -> None:
         events = load_table(spark, SF_DIR, "events")
         events.count()  # warm the JVM + parquet footers (untimed)
         # warm the Python worker daemons too (one-time ~1-2 s fork +
-        # Arrow import cost): merged_scan is the first Pandas-API query
-        # in the suite and was absorbing the whole daemon spin-up into
-        # its number (r5 misread it as a 2.8x operator regression)
+        # Arrow import cost): otherwise the first Pandas-API query in
+        # the suite absorbs the whole daemon spin-up into its number
+        # (r5 misread that as a 2.8x operator regression)
         spark.range(32).repartition(32).mapInPandas(
             lambda it: it, "id long"
         ).count()
@@ -153,11 +155,7 @@ def main() -> None:
 
     def do_write():
         # zone_map_cols builds the key zone-map sidecar at write time —
-        # that is the production layout (SaltedTable.write docs), and it
-        # makes merged_scan's number the steady-state one: without the
-        # sidecar the first scan_merged pays a one-off full-column zone
-        # scan that r5's bench misread as a 2.8x regression
-        # (BENCH_HISTORY.md, round-6 definition change).
+        # that is the production layout (SaltedTable.write docs).
         # row_group_bytes: keep ~8 row groups per bucket file at ANY
         # bench SF so intra-file pruning engages like it does on
         # production GB-class files (128 MB groups). Estimated off the
@@ -186,11 +184,10 @@ def main() -> None:
     timed("salted_write", do_write)
     tbl = tbl_holder.get("t")
 
-    # 2. salted ordered range scan (O7/O8/O9). Both scan paths record
-    # the STEADY-STATE call: one untimed priming run absorbs the
-    # first-call one-offs (zone-sidecar load + plan codegen — ~1.2 s at
-    # sf0.1, which r5 misread as a 2.8x merged regression; round-6
-    # definition change, BENCH_HISTORY.md).
+    # 2. salted ordered range scan (O7/O8/O9), recorded as the
+    # STEADY-STATE call: one untimed priming run absorbs the first-call
+    # one-offs (plan codegen; round-6 definition change,
+    # BENCH_HISTORY.md).
     def warm_timed(name, fn):
         try:
             fn()
@@ -201,13 +198,6 @@ def main() -> None:
     warm_timed(
         "ordered_scan",
         lambda: tbl.scan(start=bounds.lo, stop=bounds.hi, ordered=True).collect(),
-    )
-
-    # 2b. the same read through the exchange-free merge path (zone-
-    # planned shard merge instead of a range-exchange sort)
-    warm_timed(
-        "merged_scan",
-        lambda: tbl.scan_merged(start=bounds.lo, stop=bounds.hi).collect(),
     )
 
     # 3. point gets (P2) — 10 single gets through the salt-pruned path,
@@ -359,10 +349,7 @@ def main() -> None:
     # stderr echo for interactive runs.
     if shuffle_bytes:
         try:
-            side = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                f"SHUFFLE_sf{sf}.json",
-            )
+            side = os.path.join(SIDECAR_DIR, f"SHUFFLE_sf{sf}.json")
             with open(side, "w") as f:
                 json.dump(
                     {"sf": sf, "noise_probe": noise, "shuffle_bytes": shuffle_bytes},

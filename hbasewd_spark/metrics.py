@@ -23,8 +23,8 @@ class ShuffleAudit:
 
     The diff is over the store's cumulative per-stage totals, so
     concurrent foreign jobs on the same session would pollute it —
-    callers serialize their measurements (bench and the audit tool
-    run one action at a time). Long sessions can also evict retained
+    callers serialize their measurements (bench runs one action at a
+    time). Long sessions can also evict retained
     stages (spark.ui.retainedStages, default 1000), which would shrink
     the "before" snapshot and inflate the delta — keep the measured
     action adjacent to its snapshot, as measure() does."""
@@ -38,7 +38,9 @@ class ShuffleAudit:
 
     def __init__(self, spark):
         self._spark = spark
-        self._store = spark.sparkContext._jsc.sc().statusStore()
+        sc = spark.sparkContext._jsc.sc()
+        self._store = sc.statusStore()
+        self._bus = sc.listenerBus()
         jvm = spark.sparkContext._jvm
         self._empty = jvm.java.util.ArrayList()
         # Scala default-arg accessors (public in bytecode): stageList's
@@ -48,6 +50,10 @@ class ShuffleAudit:
         ]
 
     def _totals(self) -> dict[str, int]:
+        # the store is fed asynchronously: drain the listener bus so
+        # the stages of an action that just returned are counted in its
+        # own delta, not in the next one's
+        self._bus.waitUntilEmpty()
         t = dict.fromkeys(self.FIELDS, 0)
         it = self._store.stageList(self._empty, *self._defaults).iterator()
         while it.hasNext():

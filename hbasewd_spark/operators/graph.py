@@ -426,10 +426,14 @@ def pagerank(
     base = (3 * PR_SCALE) // (PR_D_DEN * n_nodes)
     r = nodes.select("node", F.lit(PR_SCALE // n_nodes).cast("bigint").alias("r"))
     for _ in range(iters):
-        # N rows; the checkpoint cuts the doubling lineage (and, being
-        # eager, runs every job referencing the persisted operands
-        # before they are released below)
+        # N rows; the checkpoint cuts the doubling lineage
         r = _pr_iteration(e, r, srcs, nodes, base, n_nodes, big_v).localCheckpoint(eager=False)
+    if persisted:
+        # the checkpoints are lazy: materialize r while the persisted
+        # operands are still cached, or the caller's action re-runs the
+        # last iteration against released operands (with AQE off, the
+        # whole loop from the source files)
+        r.count()
     for df in persisted:
         df.unpersist()
     return r.select("node", F.col("r").alias("rank_e9"))

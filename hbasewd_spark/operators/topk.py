@@ -59,7 +59,6 @@ def global_rank(
     df: DataFrame,
     order_cols: list[Column | str],
     rk_name: str = "rn",
-    presorted: bool = False,
 ) -> DataFrame:
     """Stamp a 1-based global row number over a TOTAL order on every
     row of ``df`` — the unbounded-rank sibling of :func:`global_topk`,
@@ -84,17 +83,10 @@ def global_rank(
     No WindowExec, no single-task stage; every stage is as parallel as
     the sort itself. ``order_cols`` must define a total order so the
     stamped ranks are deterministic and oracle-reproducible.
-
-    ``presorted=True`` skips step 1's range-exchange sort for inputs
-    whose partitions are ALREADY disjoint ascending ranges with rows
-    sorted within (e.g. :meth:`SaltedTable.scan_merged` output) — the
-    rank stamp then costs only the two tiny metadata jobs, keeping the
-    input's exchange-free property. ``order_cols`` still documents the
-    order being witnessed; the caller owns its truth.
     """
     spark = df.sparkSession
     tagged = (
-        (df if presorted else df.orderBy(*order_cols))
+        df.orderBy(*order_cols)
         .select(
             F.spark_partition_id().alias("__pid"),
             F.monotonically_increasing_id().alias("__mid"),

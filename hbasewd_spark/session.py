@@ -1,10 +1,11 @@
 """SparkSession factory for the engine.
 
-Local-mode defaults tuned for the test/bench container (local[32],
-128 GiB). On a real cluster these settings are owned by the deploy; the
-only engine-required invariants are UTC session timezone (oracle
-comparability), AQE on (runtime re-planning, skew-join handling at
-scale) and Arrow enabled (fast pandas-UDF boundary).
+Local-mode defaults sized from the host: all local cores and a driver
+heap of ``DRIVER_HEAP_SHARE`` of physical RAM. On a real cluster these
+settings are owned by the deploy; the only engine-required invariants
+are UTC session timezone (oracle comparability), AQE on (runtime
+re-planning, skew-join handling at scale) and Arrow enabled (fast
+pandas-UDF boundary).
 """
 
 from __future__ import annotations
@@ -12,6 +13,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# share of physical RAM given to the local-mode driver JVM heap; the
+# rest is left to the Python workers, Arrow buffers and the OS, so a
+# host without swap is never asked for more heap than it holds
+DRIVER_HEAP_SHARE = 0.6
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a local-mode session:
+    ``$SPARK_DRIVER_MEMORY`` when set, else ``DRIVER_HEAP_SHARE`` of
+    physical RAM in whole GiB, at least ``1g``."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(DRIVER_HEAP_SHARE * phys_bytes / 2**30))}g"
 
 
 def get_spark(app_name: str = "hbasewd_spark", cpus: int | None = None) -> SparkSession:
@@ -32,7 +50,7 @@ def get_spark(app_name: str = "hbasewd_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # Throughput collector for batch analytics: the default G1 on a
         # large single-JVM heap showed frequent ~500ms young-gen pauses
         # under allocation-heavy explode/HOF stages (measured at sf1:

@@ -239,7 +239,7 @@ def idempotent_salted_batch_write(
         # data signature so fresh zone-map sidecars can be maintained
         # incrementally after the renames instead of going stale on
         # every epoch (which would cost a continuously-streaming table
-        # its fast_count/scan_merged metadata path permanently)
+        # its fast_count/pruned_scan metadata path permanently)
         tbl = None
         pre_sig = None
         try:

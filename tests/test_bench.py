@@ -12,7 +12,7 @@ import json
 import pytest
 
 
-def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys):
+def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys, tmp_path):
     import bench
     from hbasewd_spark import queries as Q
 
@@ -22,6 +22,8 @@ def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys):
     # break one mid-suite query; bench must still time all the others
     monkeypatch.setattr(Q.REGISTRY["ext_text_stats"], "fn", boom)
     monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    # the per-scale shuffle sidecar must not rewrite the committed one
+    monkeypatch.setattr(bench, "SIDECAR_DIR", str(tmp_path))
 
     bench.main()
 
@@ -37,3 +39,6 @@ def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys):
     assert len(timed) >= 28
     assert all(isinstance(v, float) and v >= 0 for v in timed.values())
     assert payload["value"] == pytest.approx(sum(timed.values()), abs=0.1)
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    side = json.loads((tmp_path / f"SHUFFLE_sf{sf}.json").read_text())
+    assert side["sf"] == sf and side["shuffle_bytes"]

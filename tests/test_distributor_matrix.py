@@ -135,35 +135,6 @@ def test_salt_domain(table):
         assert len(salts) > 1
 
 
-def test_scanner_heap_merge_matrix(table):
-    """scanner() parity for EVERY strategy (DistributedScanner.java:
-    106-139: one scanner per bucket, next() pops the smallest head):
-    the driver-pull heap merge must yield the same rows as the
-    distributed ordered scan, in non-decreasing key order, and each
-    per-bucket stream's plan must be Exchange-free (pruned scan +
-    bucket-local sort only). Duplicate keys (the zig-zag fixture keeps
-    them) may tie-break differently between the two paths, so rows are
-    compared as a multiset and order is asserted on the key alone."""
-    start, stop = _bounds(table, 100, 900)
-    want = [
-        tuple(r) for r in table.scan(start=start, stop=stop, ordered=True).collect()
-    ]
-    got = [tuple(r) for r in table.scanner(start=start, stop=stop)]
-    assert sorted(got) == sorted(want)
-    assert len(got) == expected_in_range(100, 899)
-    cols = table.scan(start=start, stop=stop).columns
-    key_idx = cols.index(table.key_col)
-    keys = [r[key_idx] for r in got]
-    assert keys == sorted(keys)
-    plan = (
-        table._bucket_scan_df(0, start, stop)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-
-
 def test_multi_get(table):
     """Batch point lookup (HTable.get(List<Get>) parity): same rows as
     N single gets, one job."""

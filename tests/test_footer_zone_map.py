@@ -8,7 +8,7 @@ FOOTERS (a metadata pass) instead of scanning the column. Pins:
 2. types whose stats pyarrow cannot decode (FLBA decimal) flip
    ``_stats_ok`` and ``_zone_source`` falls back to the column scan —
    the sidecar is right either way;
-3. the consumers (fast_count / pruned_scan / expire / scan_merged)
+3. the consumers (fast_count / pruned_scan / expire / ordered scan)
    produce exact results on a footer-built sidecar;
 4. the footer path is the one actually taken on a plain salted write
    (booby-trap: the scan-based ``zone_map`` raises).
@@ -104,9 +104,9 @@ def test_footer_sidecar_serves_all_consumers_exactly(spark, tmp_path):
     assert expect > 0
     assert t.fast_count(lo, hi) == expect
     assert t.pruned_scan("ts", lo, hi).count() == expect
-    merged = t.scan_merged(start=lo, stop=hi).toPandas()
-    assert len(merged) == expect
-    assert merged["ts"].is_monotonic_increasing
+    ordered = t.scan(lo, hi, ordered=True).toPandas()
+    assert len(ordered) == expect
+    assert ordered["ts"].is_monotonic_increasing
     stats = t.expire(before=lo)
     assert stats["rows_dropped"] == 3000 - t.scan().count()
     assert t.scan().count() == df.where(F.col("ts") >= lo).count()
@@ -133,8 +133,8 @@ def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
     sidecars incrementally (footer stats of the epoch's files appended
     under the commit lock), so a continuously-streaming table keeps
     its metadata path. Three epochs land, then an epoch REPLAY (purge
-    + re-append); after each, fast_count and scan_merged must run with
-    the live column scan booby-trapped."""
+    + re-append); after each, fast_count must run with the live column
+    scan booby-trapped, and the ordered scan must stay exact."""
     from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
 
     base = spark.range(1000).select(
@@ -168,9 +168,9 @@ def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
     t.refresh()
     assert t._zone_sidecar_df("k") is not None
     assert t.fast_count(0, 10**9) == 2500  # exactly-once after replay
-    merged = t.scan_merged(start=900, stop=1800).toPandas()
-    assert len(merged) == 900
-    assert merged["k"].is_monotonic_increasing
+    ordered = t.scan(900, 1800, ordered=True).toPandas()
+    assert len(ordered) == 900
+    assert ordered["k"].is_monotonic_increasing
 
 
 def test_epoch_on_stale_sidecar_leaves_it_stale(spark, tmp_path):

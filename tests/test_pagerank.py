@@ -157,6 +157,41 @@ def test_large_v_shuffle_path_bit_identical(spark):
     assert a == b
 
 
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_large_v_result_is_materialized_before_release(spark, tmp_path, aqe):
+    # the big_v loop persists its edge/node operands and releases them
+    # before returning, so the returned ranks must already be
+    # materialized: the caller's action reruns no upstream stage (no
+    # shuffle traffic) and reads no source file (it succeeds with the
+    # parquet inputs deleted). Without AQE nothing upstream runs before
+    # the release, so a lazy result recomputes everything from files.
+    import shutil
+
+    from hbasewd_spark.metrics import ShuffleAudit
+
+    rows = [(i % 9, (i * 5) % 9, 1 + i % 3) for i in range(30)]
+    want = _ranks(pagerank(_edges(spark, rows), _nodes(spark, range(11)), iters=3))
+    _edges(spark, rows).write.parquet(str(tmp_path / "e"))
+    _nodes(spark, range(11)).write.parquet(str(tmp_path / "n"))
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        r = pagerank(
+            spark.read.parquet(str(tmp_path / "e")),
+            spark.read.parquet(str(tmp_path / "n")),
+            iters=3,
+            small_graph_edges=0,
+            broadcast_nodes_max=0,
+        )
+        shutil.rmtree(tmp_path / "e")
+        shutil.rmtree(tmp_path / "n")
+        got, m = ShuffleAudit(spark).measure(r.collect)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert m["shuffle_read_bytes"] == 0 and m["shuffle_write_bytes"] == 0, m
+    assert {x["node"]: x["rank_e9"] for x in got} == want
+
+
 def test_large_v_iteration_plan_has_no_rank_broadcast(spark):
     # the big_v iteration body must contain NO BroadcastHashJoin — the
     # |V|-row rank relation joins via shuffle; the only broadcast left

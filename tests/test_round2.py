@@ -558,95 +558,6 @@ def test_register_view_plain_sql_matches_scan(spark, tmp_path):
     assert "salt" not in q.columns
 
 
-def test_scanner_heap_merge_matches_ordered_scan(spark, tmp_path):
-    """scanner() must yield exactly the ordered-scan rows in key order
-    WITHOUT a cluster-side range sort: each bucket stream's plan is
-    Exchange-free (pruned scan + local sort), and the driver heap-merge
-    restores global order — DistributedScanner.java:106-139 semantics."""
-    from hbasewd_spark.plans.distributor import HashDistributor
-    from hbasewd_spark.sources.kv_fixture import KEY_PREFIX, kv_df
-    from hbasewd_spark.sources.salted_table import SaltedTable
-
-    t = SaltedTable.write(
-        kv_df(spark), str(tmp_path / "hm"), HashDistributor(8), "key_long"
-    )
-    lo, hi = KEY_PREFIX + 100, KEY_PREFIX + 900
-    want = [tuple(r) for r in t.scan(start=lo, stop=hi, ordered=True).collect()]
-    got = [tuple(r) for r in t.scanner(start=lo, stop=hi)]
-    assert got == want and len(got) == 400
-    plan = (
-        t._bucket_scan_df(3, lo, hi)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "PartitionFilters: [isnotnull(salt" in plan
-
-
-def test_scanner_capped_refill_bounds_skewed_bucket(spark, tmp_path):
-    """VERDICT r11 #7: the reference's refill buffer is an unbounded
-    ArrayList (DistributedScanner.java:123) — one dominant bucket
-    balloons the client. scanner(max_buffer_rows=...) must (a) split a
-    90%-skewed bucket into key-range chunks whose ACTUAL row counts
-    stay within ~2x the cap (quantile cuts are estimates), (b) chain
-    them into the identical row stream the uncapped scanner yields,
-    and (c) leave balanced small buckets un-split."""
-    from pyspark.sql import functions as F
-
-    from hbasewd_spark.plans.distributor import HashDistributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
-
-    class SkewDistributor(HashDistributor):
-        name = "skew90"
-
-        def salt_expr(self, key):
-            c = F.col(key) if isinstance(key, str) else key
-            return (
-                F.when(F.pmod(c, F.lit(10)) < 9, F.lit(0))
-                .otherwise(F.lit(1))
-                .cast("int")
-            )
-
-    df = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    t = SaltedTable.write(
-        df, str(tmp_path / "skewcap"), SkewDistributor(2), "k",
-        zone_map_cols=["k"],
-    )
-    cap = 500
-    # (a) the skewed bucket (9000 rows) splits; every chunk's REAL row
-    # count is bounded near the cap
-    bounds = t._bucket_chunk_bounds(0, None, None, cap)
-    assert len(bounds) >= 9000 // cap - 2, bounds
-    edges = [None] + bounds + [None]
-    chunk_rows = [
-        t._bucket_scan_df(0, edges[i], edges[i + 1]).count()
-        for i in range(len(edges) - 1)
-    ]
-    assert sum(chunk_rows) == 9000
-    assert max(chunk_rows) <= 2 * cap, chunk_rows
-    # (c) the small bucket (1000 rows) fits ~2 chunks at most
-    assert len(t._bucket_chunk_bounds(1, None, None, cap)) <= 2
-    # (b) capped and uncapped streams are identical, bounded and not
-    want = [tuple(r) for r in t.scanner()]
-    got = [tuple(r) for r in t.scanner(max_buffer_rows=cap)]
-    assert got == want and len(got) == 10_000
-    lo, hi = 2_000, 7_000
-    want_rng = [tuple(r) for r in t.scanner(start=lo, stop=hi)]
-    got_rng = [tuple(r) for r in t.scanner(start=lo, stop=hi, max_buffer_rows=cap)]
-    assert got_rng == want_rng and len(got_rng) == 5_000
-    # chunk plans stay Exchange-free like the uncapped bucket streams
-    plan = (
-        t._bucket_scan_df(0, bounds[0], bounds[1])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-
-
 def test_indexed_point_get_detects_stale_index(spark, tmp_path):
     """An index built before an append must not silently drop the
     newer rows of an already-indexed key: under round-robin the

@@ -237,13 +237,12 @@ def test_manifest_live_fallback_without_sidecar(spark, kv, tmp_path):
 
 
 def test_spark_planning_reads_the_manifest(spark):
-    """Routing proof for the manifest seam: past-threshold auto shard
-    planning must build its relation through _manifest_of (the same
-    relation manifest() exposes), never a driver collect."""
+    """Routing proof for the manifest seam: past-threshold fast_count
+    must classify through _manifest_of (the same relation manifest()
+    exposes), never a driver collect."""
     import json as _json
 
     from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
 
     t = SaltedTable(
         spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
@@ -267,13 +266,6 @@ def test_spark_planning_reads_the_manifest(spark):
     calls = []
     orig = SaltedTable._manifest_of
     t._manifest_of = lambda zdf: (calls.append(1), orig(t, zdf))[1]
-    schema = StructType.fromJson(_json.loads(t.data_schema_json))
-    desc = t._plan_shards_spark(1000, 900_000, 8, schema, auto=True)
-    rows = desc.collect()
-    assert calls, "shard planning did not read the manifest relation"
-    assert 2 <= len(rows) <= 8 and all(len(r.files) > 0 for r in rows)
-    # and fast_count's classification shares the same seam
-    calls.clear()
     assert t.fast_count(1000, 2000) == 10 * 200
     assert calls, "fast_count did not read the manifest relation"
 
@@ -313,3 +305,23 @@ def test_fast_count_spark_path_150k_synthetic_files(spark):
     assert t.fast_count(1000, 2000) == 10 * 190
     # unbounded: metadata-only, nulls count (scan applies no predicate)
     assert t.fast_count() == n_files * 200
+
+
+def test_refresh_clears_zone_count_memo(spark, kv, tmp_path):
+    """The _zone_counts memo steers fast_count's auto-routing; after a
+    lifecycle verb changes the file count, refresh() must drop it so
+    the next count re-reads the sidecar instead of routing on the
+    stale count."""
+    t = SaltedTable.write(
+        kv, str(tmp_path / "memo"), HashDistributor(8), "key_long",
+        zone_map_cols=["key_long"],
+    )
+    lo, hi = KEY_PREFIX + 100, KEY_PREFIX + 200
+    n_files = t._zone_sidecar_df("key_long").count()
+    assert t.fast_count(lo, hi) == expected_in_range(100, 199)
+    assert t._zone_counts == {"key_long": n_files}
+    t._zone_counts = {"key_long": 10**6}  # simulate a stale memo
+    t.refresh()
+    assert t._zone_counts is None
+    assert t.fast_count(lo, hi) == expected_in_range(100, 199)
+    assert t._zone_counts == {"key_long": n_files}
